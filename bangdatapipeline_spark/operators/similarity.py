@@ -1669,6 +1669,53 @@ def _pq_query_lut(spark: SparkSession, scored: DataFrame, sf_dir: str):
     return bq
 
 
+def _adc_topk_kernel(lut_bq):
+    """mapInPandas kernel of ``knn_pq_topk``: per Arrow batch of
+    ``(n_id, codes)`` rows, the ADC sims against every query through the
+    broadcast LUT, cut to the block-local top-k candidates. A corpus code
+    outside the LUT's code domain raises instead of mis-indexing."""
+
+    def adc_topk(batches):
+        q_ids, lut = lut_bq.value  # lut: nq x subs x codes
+        nq, n_codes = len(q_ids), lut.shape[2]
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            ids = pdf["n_id"].to_numpy()
+            code_mat = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
+            lo, hi = int(code_mat.min()), int(code_mat.max())
+            if lo < 0 or hi >= n_codes:
+                raise ValueError(
+                    f"PQ corpus codes span [{lo}, {hi}], outside the query "
+                    f"LUT's code domain [0, {n_codes - 1}]"
+                )
+            nb = len(ids)
+            acc = np.zeros((nb, nq))
+            for s in range(_PQ_SUBS):  # fixed ascending subspace order
+                acc += lut[:, s, code_mat[:, s]].T
+            out_q, out_n, out_s = [], [], []
+            for j in range(nq):
+                col = np.where(ids == q_ids[j], -np.inf, acc[:, j])
+                fin = np.nonzero(np.isfinite(col))[0]
+                if len(fin) > TOP_K:
+                    kth = np.partition(col[fin], len(fin) - TOP_K)[
+                        len(fin) - TOP_K
+                    ]
+                    fin = fin[col[fin] >= kth - 1e-6]
+                out_q.append(np.full(len(fin), q_ids[j]))
+                out_n.append(ids[fin])
+                out_s.append(col[fin])
+            yield pd.DataFrame(
+                {
+                    "q_id": np.concatenate(out_q),
+                    "n_id": np.concatenate(out_n),
+                    "sim_raw": np.concatenate(out_s),
+                }
+            )
+
+    return adc_topk
+
+
 @register("knn_pq_topk", oracle=_PQ_ORACLE)
 def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN: the embedding splits into {_PQ_SUBS}
@@ -1743,45 +1790,13 @@ def knn_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~k x nq x n_blocks instead of nq x |corpus|.
     lut_bq = _pq_query_lut(spark, scored, sf_dir)
 
-    def adc_topk(batches):
-        q_ids, lut = lut_bq.value  # lut: nq x subs x codes
-        nq = len(q_ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            ids = pdf["n_id"].to_numpy()
-            code_mat = np.vstack(pdf["codes"].to_numpy()).astype(np.int64)
-            nb = len(ids)
-            acc = np.zeros((nb, nq))
-            for s in range(_PQ_SUBS):  # fixed ascending subspace order
-                acc += lut[:, s, code_mat[:, s]].T
-            out_q, out_n, out_s = [], [], []
-            for j in range(nq):
-                col = np.where(ids == q_ids[j], -np.inf, acc[:, j])
-                fin = np.nonzero(np.isfinite(col))[0]
-                if len(fin) > TOP_K:
-                    kth = np.partition(col[fin], len(fin) - TOP_K)[
-                        len(fin) - TOP_K
-                    ]
-                    fin = fin[col[fin] >= kth - 1e-6]
-                out_q.append(np.full(len(fin), q_ids[j]))
-                out_n.append(ids[fin])
-                out_s.append(col[fin])
-            yield pd.DataFrame(
-                {
-                    "q_id": np.concatenate(out_q),
-                    "n_id": np.concatenate(out_n),
-                    "sim_raw": np.concatenate(out_s),
-                }
-            )
-
     codes4 = (
         corpus_codes.groupBy("n_id")
         .agg(F.array_sort(F.collect_list(F.struct("s", "code"))).alias("sc"))
         .select("n_id", F.transform("sc", lambda x: x["code"]).alias("codes"))
     )
     sims = codes4.mapInPandas(
-        adc_topk, schema="q_id long, n_id long, sim_raw double"
+        _adc_topk_kernel(lut_bq), schema="q_id long, n_id long, sim_raw double"
     ).select("q_id", "n_id", F.round("sim_raw", 6).alias("sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
     return (

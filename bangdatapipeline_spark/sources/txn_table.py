@@ -24,11 +24,13 @@ O(changed-data) operation instead of O(table):
   * the table is hash-bucketed on the merge key (``_bucket =
     pmod(xxhash64(key), n_buckets)`` as a partition directory), so every
     key lives in exactly one bucket's files;
-  * a merge computes the DISTINCT buckets its changelog touches (at most
-    ``n_buckets`` values — a bounded metadata aggregate, like the commit
-    protocol itself), reads ONLY those buckets' live files, applies
-    latest-wins upserts + tombstone deletes, and rewrites ONLY those
-    buckets; untouched buckets' files carry over by reference.
+  * a merge computes the DISTINCT buckets its changelog keys hash to (at
+    most ``n_buckets`` values — a bounded metadata aggregate, like the
+    commit protocol itself) and rewrites ONLY those buckets in ONE
+    shuffle: their live rows plus the changelog, hash-partitioned on
+    ``_bucket``, one latest-wins window per key (upserts + tombstone
+    deletes), one file per bucket; untouched buckets carry over by
+    reference.
 
 Idempotent replay — the property the streaming sinks' ``v{batch_id}``
 contract approximates — is exact here: a merge carries an ``(app_id,
@@ -51,7 +53,7 @@ import os
 import uuid
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 _LOG_DIR = "_txn_log"
 _DATA_DIR = "data"
@@ -204,7 +206,8 @@ class TxnTable:
         first so each bucket lands in ONE file (merge/OPTIMIZE output);
         ``pack=False`` keeps the caller's partitioning — a zero-shuffle
         ingest where every input partition writes its own slice of each
-        bucket (CREATE), leaving small files for OPTIMIZE to bin-pack."""
+        bucket (CREATE), leaving small files for OPTIMIZE to bin-pack, or
+        rows the caller already hash-partitioned on the bucket (MERGE)."""
         rel_root = f"txn-{version:08d}-{uuid.uuid4().hex[:8]}"
         out = os.path.join(self.path, _DATA_DIR, rel_root)
         writer = df.repartition("_bucket") if pack else df
@@ -224,6 +227,45 @@ class TxnTable:
     @staticmethod
     def _bucket_expr(key_col: str, n_buckets: int):
         return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+    @classmethod
+    def _merge_rows(
+        cls,
+        base: DataFrame | None,
+        changelog: DataFrame,
+        key_col: str,
+        n_buckets: int,
+        data_cols: list[str],
+        order_cols: tuple[str, str],
+        delete_col: str,
+    ) -> DataFrame:
+        """Rewritten rows of the touched buckets: ``base`` (their live
+        rows, or None) plus the changelog, ONE shuffle on ``_bucket``, then
+        a per-key window ordered changelog-first, latest-first. A base row
+        survives when its key has no changelog row or is NULL; the rank-1
+        changelog row replaces it WHOLESALE unless it is a tombstone. The
+        bucket partitioning already clusters the window and the write."""
+        o1, o2 = order_cols
+        rows = changelog.select(*data_cols, o1, o2, delete_col).withColumn(
+            "_src", F.lit(1)
+        )
+        if base is not None:
+            rows = base.select(*data_cols, F.lit(0).alias("_src")).unionByName(
+                rows, allowMissingColumns=True
+            )
+        w = Window.partitionBy("_bucket", key_col).orderBy(
+            F.col("_src").desc(), F.col(o1).desc(), F.col(o2).desc()
+        )
+        ranked = (
+            rows.withColumn("_bucket", cls._bucket_expr(key_col, n_buckets))
+            .repartition("_bucket")
+            .withColumn("_rn", F.row_number().over(w))
+            .withColumn("_matched", F.first("_src").over(w) == 1)
+        )
+        keep = F.when(
+            F.col("_src") == 0, ~F.col("_matched") | F.col(key_col).isNull()
+        ).otherwise((F.col("_rn") == 1) & ~F.coalesce(delete_col, F.lit(False)))
+        return ranked.filter(keep).select(*data_cols, "_bucket")
 
     # ------------------------------------------------------------------
     # operations
@@ -276,8 +318,13 @@ class TxnTable:
         and the ``order_cols`` total order; per key the latest changelog
         row wins WHOLESALE — a matched row is replaced by the changelog
         row's columns including its NULLs (WHEN MATCHED UPDATE / WHEN
-        MATCHED AND is_delete DELETE / WHEN NOT MATCHED INSERT). Only
-        the buckets containing changed keys are rewritten. Returns merge
+        MATCHED AND is_delete DELETE / WHEN NOT MATCHED INSERT). NULL
+        keys never match: NULL-key table rows all stay, and NULL-key
+        changelog rows collapse latest-wins and are inserted.
+
+        Only the buckets containing changed keys are rewritten, in one
+        bucket-keyed shuffle of their live rows plus the changelog (see
+        ``_merge_rows``), one file per touched bucket. Returns merge
         stats; replaying an already-committed ``(app_id, version)`` is a
         NO-OP (idempotent).
         """
@@ -335,72 +382,22 @@ class TxnTable:
                 if c not in {delete_col, o1, o2, "_bucket"}
             ]
 
-        # latest-wins compaction of the changelog (shuffle sized by the
-        # changelog, never the table)
-        from pyspark.sql import Window
+        # file-level pruning: the buckets the raw changelog keys hash to
+        # (latest-wins keeps a row per key, so it is the same set) —
+        # bounded: <= n_buckets rows of metadata, like the manifest
+        buckets = changelog.select(self._bucket_expr(key_col, n_buckets))
+        touched = {r[0] for r in buckets.distinct().collect()}
+        snapshot = self.snapshot(commits=commits)
+        affected = [e for e in snapshot if e["bucket"] in touched]
+        carried = [e for e in snapshot if e["bucket"] not in touched]
 
-        w = Window.partitionBy(key_col).orderBy(
-            F.col(o1).desc(), F.col(o2).desc()
+        merged = self._merge_rows(
+            self.read(affected) if affected else None, changelog, key_col,
+            n_buckets, data_cols, order_cols, delete_col,
         )
-        # persisted: the latest-wins window is the merge's dominant cost
-        # and feeds BOTH the touched-buckets collect and the write job —
-        # unpersisted it ran twice (r11 review)
-        compacted = (
-            changelog.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", o1, o2)
-            .withColumn("_bucket", self._bucket_expr(key_col, n_buckets))
-            .persist()
-        )
-        try:
-            # file-level pruning: which buckets does the delta touch?
-            touched = {
-                r[0] for r in compacted.select("_bucket").distinct().collect()
-            }  # bounded: <= n_buckets rows of metadata, like the manifest
-            snapshot = self.snapshot(commits=commits)
-            affected = [e for e in snapshot if e["bucket"] in touched]
-            carried = [e for e in snapshot if e["bucket"] not in touched]
-
-            base = (
-                self.read(affected)
-                if affected
-                else self.spark.createDataFrame(
-                    [], self.read(snapshot).select(*data_cols).schema
-                )
-            )
-            delta = compacted.select(
-                *[F.col(c).alias(f"_d_{c}") for c in data_cols],
-                F.col(delete_col).alias("_d_del"),
-                F.lit(True).alias("_d_present"),
-                "_bucket",
-            )
-            # latest-wins is WHOLESALE row replacement: a matched row
-            # takes the changelog row's columns INCLUDING NULLs (a CDC
-            # update clearing a field must clear it — per-column
-            # coalesce kept the stale value forever, r11 review). The
-            # _d_present marker, not key nullness, decides which side
-            # wins, so NULL keys can't misroute the choice.
-            has_delta = F.col("_d_present").isNotNull()
-            merged = (
-                base.join(
-                    delta, base[key_col] == delta[f"_d_{key_col}"], "full_outer"
-                )
-                .filter(~F.coalesce("_d_del", F.lit(False)))  # MATCHED+del: DELETE
-                .select(
-                    *[
-                        F.when(has_delta, F.col(f"_d_{c}"))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        for c in data_cols
-                    ]
-                )
-                .withColumn("_bucket", self._bucket_expr(key_col, n_buckets))
-            )
-
-            next_commit = len(commits)
-            added = self._write_data_files(merged, version=next_commit)
-        finally:
-            compacted.unpersist()
+        next_commit = len(commits)
+        # already partitioned on _bucket: one file per touched bucket
+        added = self._write_data_files(merged, version=next_commit, pack=False)
         self._write_commit(
             {
                 "version": next_commit,

@@ -233,3 +233,36 @@ def test_exact_select_rejects_colliding_carry(spark):
     )
     rows = exact_select(df, good, width=100).collect()
     assert [(r.grp, r.role, r.v) for r in rows] == [("a", "med", 20)]
+
+
+def test_adc_topk_kernel_scores_via_lut_and_rejects_codes_outside_it():
+    """The PQ ADC kernel sums one LUT cell per subspace, and a corpus code
+    outside the LUT's code domain (the LUT is sized from the query side)
+    raises a clear error instead of an IndexError, or a silent wrap-around
+    read for a negative code."""
+    from types import SimpleNamespace
+
+    import pandas as pd
+
+    from bangdatapipeline_spark.operators.similarity import _adc_topk_kernel
+
+    q_ids = np.array([0, 1])
+    lut = np.arange(2 * 4 * 3, dtype=float).reshape(2, 4, 3)  # nq x subs x codes
+    kernel = _adc_topk_kernel(SimpleNamespace(value=(q_ids, lut)))
+
+    def batch(*codes):
+        return pd.DataFrame(
+            {"n_id": [7 + i for i in range(len(codes))], "codes": list(codes)}
+        )
+
+    out = pd.concat(kernel([batch([0, 1, 2, 0], [2, 2, 2, 2])]))
+    got = {(r.q_id, r.n_id): r.sim_raw for r in out.itertuples()}
+    want = {
+        (q, 7 + i): sum(lut[q, s, c] for s, c in enumerate(codes))
+        for q in (0, 1)
+        for i, codes in enumerate(([0, 1, 2, 0], [2, 2, 2, 2]))
+    }
+    assert got == want
+    for bad in ([0, 3, 0, 0], [0, -1, 0, 0]):
+        with pytest.raises(ValueError, match="outside the query LUT's code domain"):
+            list(kernel([batch([0, 0, 0, 0], bad)]))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 
 import pyspark.sql.functions as F
@@ -437,3 +438,122 @@ def test_merge_cdc_version_pinned_at_snapshot_read(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(TxnTable, "snapshot", snapshot_then_concurrent_commit)
     with pytest.raises(RuntimeError, match="concurrent commit conflict"):
         t.merge_cdc(_changelog(spark), app_id="racer", version=1)
+
+
+# ----------------------------------------------------------------------
+# MERGE semantics pins on hand-built tables (key k, payload v)
+# ----------------------------------------------------------------------
+_KV = "k bigint, v string"
+_CDC = "k bigint, v string, is_delete boolean, ts_us bigint, event_id bigint"
+
+
+def _kv(df):
+    """Rows as sortable (key, value) pairs; NULL keys sort last."""
+    return sorted(
+        ((r.k, r.v) for r in df.collect()),
+        key=lambda kv: (kv[0] is None, kv[0] or 0, kv[1] or ""),
+    )
+
+
+def _kv_table(spark, tmp_path, name, rows, n_buckets=4):
+    return TxnTable.create(
+        spark, str(tmp_path / name), spark.createDataFrame(rows, _KV),
+        key_col="k", n_buckets=n_buckets,
+    )
+
+
+def test_merge_cdc_null_keys(spark, tmp_path):
+    """NULL-key base rows never match and all survive; NULL-key changelog
+    rows collapse latest-wins among themselves and are inserted."""
+    t = _kv_table(spark, tmp_path, "nulls", [(None, "n1"), (None, "n2"), (5, "e")])
+    ch = spark.createDataFrame(
+        [(None, "c1", False, 1, 1), (None, "c2", False, 2, 1), (6, "f", False, 1, 2)],
+        _CDC,
+    )
+    assert not t.merge_cdc(ch, app_id="p", version=1)["skipped"]
+    assert _kv(t.read()) == [
+        (5, "e"), (6, "f"), (None, "c2"), (None, "n1"), (None, "n2"),
+    ]
+
+
+def test_merge_cdc_tombstone_for_absent_key_is_noop(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "absent", [(1, "a"), (2, "b")])
+    ch = spark.createDataFrame([(99, None, True, 1, 1)], _CDC)
+    assert not t.merge_cdc(ch, app_id="p", version=1)["skipped"]
+    assert _kv(t.read()) == [(1, "a"), (2, "b")]
+
+
+def test_merge_cdc_repeats_resolve_by_ts_then_event_id(spark, tmp_path):
+    """Several changes to one key in one commit: the max (ts_us,
+    event_id) row wins, whether it is an upsert or a tombstone."""
+    t = _kv_table(spark, tmp_path, "repeats", [(1, "a"), (2, "b"), (3, "c")])
+    ch = spark.createDataFrame(
+        [
+            # key 1: ts tie broken by event_id; an older ts loses
+            (1, "x", False, 2, 1), (1, "y", False, 2, 3), (1, "z", False, 1, 9),
+            # key 2: delete then re-insert — the insert is latest
+            (2, None, True, 1, 1), (2, "b2", False, 2, 1),
+            # key 3: update then delete — the delete is latest
+            (3, "c2", False, 1, 1), (3, None, True, 1, 2),
+            # key 4: new key, repeated
+            (4, "d1", False, 1, 1), (4, "d2", False, 5, 0),
+        ],
+        _CDC,
+    )
+    assert not t.merge_cdc(ch, app_id="p", version=1)["skipped"]
+    assert _kv(t.read()) == [(1, "y"), (2, "b2"), (4, "d2")]
+
+
+def test_merge_cdc_into_bucket_without_live_files(spark, tmp_path):
+    """A changelog whose keys hash only to buckets holding no live files
+    still inserts: one new file, nothing removed, every old file kept."""
+    t = _kv_table(spark, tmp_path, "sparse", [(0, "a")], n_buckets=8)
+    live = {e["bucket"] for e in t.snapshot()}
+    buckets = spark.range(64).select(
+        "id", TxnTable._bucket_expr("id", 8).alias("b")
+    ).collect()
+    new_key, new_bucket = next((r.id, r.b) for r in buckets if r.b not in live)
+    before = {e["path"] for e in t.snapshot()}
+
+    ch = spark.createDataFrame([(new_key, "n", False, 1, 1)], _CDC)
+    stats = t.merge_cdc(ch, app_id="p", version=1)
+    assert stats["touched_buckets"] == [new_bucket]
+    assert (stats["files_added"], stats["files_removed"]) == (1, 0)
+    assert before <= {e["path"] for e in t.snapshot()}
+    assert _kv(t.read()) == [(0, "a"), (new_key, "n")]
+
+
+def test_merge_cdc_after_all_rows_deleted(spark, tmp_path):
+    """Regression: once a merge tombstones every row the snapshot has no
+    live files, and the next merge must still insert (it used to raise
+    ``empty table`` while building an empty base frame)."""
+    t = _kv_table(spark, tmp_path, "emptied", [(1, "a"), (2, "b")])
+    wipe = spark.createDataFrame([(1, None, True, 1, 1), (2, None, True, 1, 2)], _CDC)
+    assert not t.merge_cdc(wipe, app_id="p", version=1)["skipped"]
+    assert t.snapshot() == []
+
+    ch = spark.createDataFrame([(3, "c", False, 2, 1)], _CDC)
+    assert not t.merge_cdc(ch, app_id="p", version=2)["skipped"]
+    assert _kv(t.read()) == [(3, "c")]
+
+
+def test_merge_rewrite_is_one_bucket_shuffle(spark, tmp_path):
+    """Plan shape of the MERGE rewrite: exactly one shuffle Exchange,
+    hash-partitioned on ``_bucket`` alone (so each touched bucket lands in
+    one partition, and one file), satisfying the per-key window without a
+    second exchange; no join node and no cached relation."""
+    t = _kv_table(spark, tmp_path, "plan", [(1, "a"), (2, "b"), (None, "n")])
+    ch = spark.createDataFrame([(1, "x", False, 1, 1), (3, "c", False, 1, 2)], _CDC)
+    merged = TxnTable._merge_rows(
+        t.read(), ch, "k", 4, ["k", "v"], ("ts_us", "event_id"), "is_delete"
+    )
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    exchanges = re.findall(r"(?<![A-Za-z])Exchange (\w+)\(([^,)]*)", plan)
+    assert len(exchanges) == 1, plan
+    kind, first_key = exchanges[0]
+    assert kind == "hashpartitioning" and first_key.startswith("_bucket#"), plan
+    assert re.search(r"hashpartitioning\(_bucket#\d+, \d+\)", plan), plan
+    assert "Window" in plan, plan
+    assert "Join" not in plan, plan
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan, plan
+    assert _kv(merged) == [(1, "x"), (2, "b"), (3, "c"), (None, "n")]
